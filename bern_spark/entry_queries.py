@@ -198,7 +198,9 @@ FROM toks GROUP BY 1
 
 def q_er_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J6 fixpoint: connected components labels on the fixture edge list
-    (chains + cycle + self-loop) via large-star/small-star; oracle is a
+    (chains + cycle + self-loop). A graph this small (at most
+    ``driver_max_edges`` = 200k edge rows) is labelled by CC's driver-side
+    union-find; larger graphs run large-star/small-star. Oracle is a
     recursive min-label reachability in DuckDB."""
     from bern_spark.operators.cc import connected_components
 

@@ -2,21 +2,31 @@
 
 The fixpoint generalization of the reference's one-hop gene-ID merge map
 (``eid = goid2goid.get(eid, eid)``, normalize.py:89-95,591-592) — SURVEY
-§2.3 J6. Implemented as the alternating **large-star / small-star**
-algorithm (Kiveris et al., "Connected Components in MapReduce and Beyond",
-SoCC'14) entirely in DataFrame ops:
+§2.3 J6. Two plans, chosen from the measured graph size (the runtime
+broadcast-or-partition decision of "To Partition, or Not to Partition,
+That is the Join Question", SIGMOD'21):
 
-- large-star: for each node u, connect every *strictly larger* neighbor to
-  u's minimum neighborhood node (incl. u);
-- small-star: connect every neighbor <= u (and u) to the minimum.
+- **driver union-find** — without a lineage store, one bounded collect
+  (``limit(driver_max_edges + 1)``) of the canonical edge rows. If the
+  graph fits (default bound 200k edge rows), a union-find on the driver
+  labels it and the labels come back as a broadcast local relation: one
+  Spark job instead of ~2 per star round. The clustering graph of
+  ``resolve_entities`` is vocabulary-sized, so this is the common case.
+- **large-star / small-star** (Kiveris et al., "Connected Components in
+  MapReduce and Beyond", SoCC'14) entirely in DataFrame ops, above the
+  bound or with a lineage store (durable, resumable iterations):
 
-Each round is a groupBy-shuffle on node id; convergence when the edge set
-stops changing. Per-iteration ``localCheckpoint`` truncates lineage so
-plans don't grow across iterations (SURVEY §7 hard part e); the driver
-loop is the only imperative control flow in the engine.
+  - large-star: for each node u, connect every *strictly larger* neighbor
+    to u's minimum neighborhood node (incl. u);
+  - small-star: connect every neighbor <= u (and u) to the minimum.
 
-Node ids are arbitrary strings; ordering is lexicographic, which is stable
-and deterministic — cluster id = min member id.
+  Each round is a groupBy-shuffle on node id; convergence when the edge
+  set stops changing. Per-iteration ``localCheckpoint`` truncates lineage
+  so plans don't grow across iterations (SURVEY §7 hard part e).
+
+Node ids are arbitrary strings; ordering is lexicographic (Spark's binary
+UTF-8 order, which equals Python's code-point order for ``str``), which
+is stable and deterministic — cluster id = min member id on both plans.
 """
 
 from __future__ import annotations
@@ -35,6 +45,36 @@ def _canonical_undirected(edges: DataFrame) -> DataFrame:
         .where(F.col("src") != F.col("dst"))
         .dropDuplicates()
     )
+
+
+def _driver_labels(spark, src: list, dst: list) -> DataFrame:
+    """Label canonical (src <= dst) pairs with a driver-side union-find in
+    which the smaller root always wins, so every root is its component's
+    minimum id. Duplicate pairs are no-ops and self-loops register their
+    node; a null endpoint survives ``least``/``greatest`` only as the pair
+    (null, null) and labels as null, exactly as on the star path."""
+    import pandas as pd
+
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]  # path halving
+            x = parent[x]
+        return x
+
+    for s, d in zip(src, dst):
+        rs, rd = find(s), find(d)
+        if rs != rd:
+            if rd < rs:
+                rs, rd = rd, rs
+            parent[rd] = rs
+    nodes = list(parent)
+    pdf = pd.DataFrame(
+        {"node": nodes, "cluster_id": [find(n) for n in nodes]}, dtype=object
+    )
+    return F.broadcast(spark.createDataFrame(pdf, "node string, cluster_id string"))
 
 
 def _sig_h_col() -> F.Column:
@@ -89,12 +129,21 @@ def connected_components(
     lineage_store=None,
     fingerprint: str | None = None,
     stage_prefix: str = "cc",
-    broadcast_labels_max_edges: int = 200_000,
+    driver_max_edges: int = 200_000,
 ) -> DataFrame:
     """Return (node, cluster_id) with cluster_id = min node id in component.
 
     ``edges``: DataFrame with string columns (src, dst). Self-loops and
     duplicates tolerated.
+
+    ``driver_max_edges``: without a ``lineage_store``, a graph of at most
+    this many edge rows (duplicates and self-loops counted) is collected
+    and labelled by a driver-side union-find, returned as a broadcast
+    local relation; larger graphs, or any graph with a store, run the
+    star loop. 0 runs the star loop on any non-empty graph. At the bound
+    the driver path is still ~10x faster: on 4 local cores a random
+    2x10^5-edge graph (2x10^5 nodes, 15k components) labelled in
+    1.9-4.3 s against 22-35 s and 126 jobs for the star loop.
 
     ``checkpoint_every`` must be >= 1: each star round references its
     input along ~4 plan branches, so without periodic lineage truncation
@@ -128,6 +177,23 @@ def connected_components(
             "silently mix edge sets"
         )
     spark = edges.sparkSession
+
+    if lineage_store is None:
+        # self-loops are kept so that a node seen only on a self-loop is
+        # still labelled; the extra row is the bound's probe. No Spark-side
+        # dedup: the union-find absorbs duplicates, and the shuffle a
+        # dedup needs would cost a job and, above the bound, a full pass
+        head = (
+            edges.select(
+                F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst")
+            )
+            .limit(driver_max_edges + 1)
+            .toArrow()
+        )
+        if head.num_rows <= driver_max_edges:
+            return _driver_labels(
+                spark, head.column("src").to_pylist(), head.column("dst").to_pylist()
+            )
 
     if lineage_store is not None:
         def _ckpt(df: DataFrame, tag: str, eager: bool = True) -> DataFrame:
@@ -198,7 +264,6 @@ def connected_components(
         return (str(r["n"]), str(r["h"]))
 
     sig = _stage_sig("init") or _sig(e)
-    n_init_edges = int(sig[0])
     converged = False
     prev_e = e
     # Predecessors a cache-only successor may still need for recompute:
@@ -289,17 +354,4 @@ def connected_components(
     # a root node itself may not appear as dst; coalesce covers it. But a
     # node appearing as dst under two roots cannot happen post-convergence;
     # guard with min() for determinism anyway.
-    out = out.groupBy("node").agg(F.min("cluster_id").alias("cluster_id"))
-    # Runtime-informed join hint (guide §3.1 — broadcast the side you
-    # KNOW is small): labels rows <= nodes <= 2 x initial canonical
-    # edges, and the init signature already measured that count for
-    # free. Downstream the labels relation joins back against the
-    # corpus-sized mentions, but its plan leaf is a checkpoint RDD with
-    # UNKNOWN stats, so the planner assumes huge and plans a sort-merge
-    # (AQE only demotes it after the mentions side's map stage has
-    # already shuffled). The hint fires only when the measured graph is
-    # small; at 10^8-surface scale n_init_edges is large, no hint is
-    # attached, and AQE stays free to choose (the pipeline.py contract).
-    if n_init_edges <= broadcast_labels_max_edges:
-        out = F.broadcast(out)
-    return out
+    return out.groupBy("node").agg(F.min("cluster_id").alias("cluster_id"))

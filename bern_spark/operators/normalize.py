@@ -175,9 +175,13 @@ def _tagged_dict(dicts: dict[str, DataFrame]) -> DataFrame:
 
     Prefixes all end in ``|`` and none is a prefix of another, so tagged
     keys cannot collide across branches. Per (tag, key) the min() dedup
-    reproduces _bcast_lookup's first-wins determinism."""
+    reproduces _bcast_lookup's first-wins determinism.
+
+    Null oids are dropped per dictionary: a struct min orders a null
+    field first, so a null oid would otherwise shadow a real one (also
+    one from a lower-priority gene dict) and resolve to CUI-less."""
     def tag(df: DataFrame, t: str, key_expr, prio: int) -> DataFrame:
-        return df.select(
+        return df.where(F.col("oid").isNotNull()).select(
             F.concat(F.lit(t), key_expr(F.col("name"))).alias("join_key"),
             F.lit(prio).alias("_prio"),
             "oid",

@@ -22,7 +22,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from bern_spark.operators.blocking import candidate_pairs, surface_nodes, with_block_keys
+from bern_spark.operators.blocking import candidate_pairs, with_block_keys
 from bern_spark.operators.cc import connected_components
 from bern_spark.operators.extract import extract_mentions
 from bern_spark.operators.normalize import CUI_LESS, attach_metadata, normalize_all
@@ -31,10 +31,12 @@ from bern_spark.operators.scoring import score_pairs
 # Bump when stage semantics change: part of the lineage fingerprint, so a
 # resumed store never replays stage parquet written by incompatible code
 # (the reference's hash-named temp files, server.py:384-396, made explicit).
-PIPELINE_VERSION = "6"  # bumped when stage OUTPUTS change, not just tokens
-# (v6: the blocking-stage MinHash seed capture fix — operators/blocking.py
-# _perm_min — changed LSH candidate sets; a v5 store must not resume with
-# pre-fix stage parquet. v5: plan tokens render via non-verbose treeString.)
+PIPELINE_VERSION = "7"  # bumped when stage OUTPUTS change, not just tokens
+# (v7: the surf_oid stage carries the block keys and names its surface
+# column ``surface``. v6: the blocking-stage MinHash seed capture fix —
+# operators/blocking.py _perm_min — changed LSH candidate sets; a v5 store
+# must not resume with pre-fix stage parquet. v5: plan tokens render via
+# non-verbose treeString.)
 
 
 def _plan_token(df: DataFrame) -> str:
@@ -444,6 +446,10 @@ def resolve_entities(
         from bern_spark.operators.normalize import CUI_LESS as _CL
         from bern_spark.operators.taggers import normalize_mirna
 
+        if lineage_store is None:
+            # the split reads `normalized` twice: uncut, the extraction
+            # (a pandas UDF) would run once per branch
+            normalized = cut(normalized)
         mir = normalized.where(F.col("etype") == "miRNA").drop("oid")
         normalized = normalized.where(F.col("etype") != "miRNA").unionByName(
             normalize_mirna(mir, mirna_dict)
@@ -463,19 +469,23 @@ def resolve_entities(
     # hot-block defense; SURVEY §7 hard part d).
     snode = lambda surf_col: F.concat_ws("#", F.lit("sf"), F.col("etype"), surf_col)  # noqa: E731
 
-    # distinct surfaces + their oids: ONE corpus-sized dedup, checkpointed
-    # so the blocking self-join and edge builds never rescan the corpus
+    # distinct surfaces + their oids and block keys: ONE corpus-sized
+    # dedup, checkpointed so the blocking self-join and edge builds never
+    # rescan the corpus. The keys are computed inside the cut: the
+    # candidate-pair plan reads its input along several branches, and
+    # uncut each branch would recompute the 16-permutation MinHash.
     surf_oid = cut(
-        normalized.select("etype", "mention", "oid").dropDuplicates(["etype", "mention"])
+        with_block_keys(
+            normalized.select("etype", F.col("mention").alias("surface"), "oid")
+            .dropDuplicates(["etype", "surface"])
+        )
     )
-    surfaces = surf_oid.select("etype", F.col("mention").alias("surface"))
-    blocked = with_block_keys(surfaces)
-    pairs = candidate_pairs(blocked, max_block_size=cfg.max_block_size, use_lsh=cfg.use_lsh)
+    pairs = candidate_pairs(surf_oid, max_block_size=cfg.max_block_size, use_lsh=cfg.use_lsh)
     emb = None
     if cfg.use_embedding_cosine:
         from bern_spark.operators.scoring import hashed_surface_embeddings
 
-        emb = hashed_surface_embeddings(surfaces)
+        emb = hashed_surface_embeddings(surf_oid)
     scored = cut(
         score_pairs(
             pairs,
@@ -491,7 +501,7 @@ def resolve_entities(
 
     # surface -> oid star edges (same-oid transitivity without pair blow-up)
     oid_edges = surf_oid.where(F.col("oid") != CUI_LESS).select(
-        snode(F.col("mention")).alias("src"),
+        snode(F.col("surface")).alias("src"),
         F.concat_ws(":", F.lit("oid"), "etype", "oid").alias("dst"),
     )
 
@@ -527,8 +537,9 @@ def resolve_entities(
         F.col("node").alias("_snode"), F.col("cluster_id").alias("_scluster")
     )
 
-    # no explicit broadcast hint: vocab-sized here, but at 10^8 distinct
-    # surfaces AQE must be free to pick a shuffle join from runtime stats
+    # no hint here: a graph small enough for CC's driver path comes back
+    # broadcast-hinted, and at 10^8 distinct surfaces AQE must be free to
+    # pick a shuffle join from runtime stats
     clustered = normalized.withColumn("_snode", snode(F.col("mention"))).join(
         surf_labels, "_snode", "left"
     )

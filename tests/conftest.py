@@ -36,3 +36,25 @@ def dfs(spark, tables):
 @pytest.fixture(scope="session")
 def dicts(dfs):
     return {k: dfs[k] for k in dfs if k.startswith(("dict_", "meta_"))}
+
+
+@pytest.fixture
+def job_group(spark):
+    """``with job_group(name) as n:`` runs the block under a fresh Spark
+    job group; afterwards ``n[0]`` is the number of jobs the group ran."""
+    import contextlib
+
+    sc = spark.sparkContext
+
+    @contextlib.contextmanager
+    def run(group: str):
+        n: list[int] = []
+        sc.setJobGroup(group, group)
+        try:
+            yield n
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+            n.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+
+    return run

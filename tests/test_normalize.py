@@ -98,3 +98,17 @@ def test_normalize_all_routes_and_cuiless_ratio(spark, dfs, dicts):
     assert got["whatever"] == "CUI-less"  # unknown etype passthrough
     ratios = {r.etype: r.cuiless_ratio for r in N.cuiless_ratio(out).collect()}
     assert ratios["pathway"] == 1.0
+
+
+def test_normalize_all_null_oid_does_not_shadow_real_oid(spark, dicts):
+    # dict_gene holds the key with a null oid, dict_gene_oldbest with a
+    # real one: the cascade must fall through to the real oid
+    d = dict(dicts)
+    d["dict_gene"] = spark.createDataFrame([(None, "NULLY")], "oid string, name string")
+    d["dict_gene_oldbest"] = _dict(spark, [("300-1", "NULLY")])
+    d["dict_drug"] = spark.createDataFrame(
+        [(None, "aspirin"), ("D1", "aspirin")], "oid string, name string"
+    )
+    m = _mentions(spark, [("NULLY", "gene"), ("aspirin", "drug")])
+    got = _collect(N.normalize_all(m, d))
+    assert got == {"NULLY": "300", "aspirin": "D1"}

@@ -79,3 +79,48 @@ def test_mention_count_conservation(result):
     # A2 analog: every extracted mention survives normalization exactly once
     m = result["mentions"]
     assert m.groupBy("etype", "mention_id").count().where(F.col("count") > 1).count() == 0
+
+
+# Spark jobs of one in-memory run on generate(n_convs=12), annotations
+# forced: 27 on local[4] and local[8] (81-82 before CC's driver path and
+# the block keys moved inside the surf_oid cut). A ceiling, so a change
+# that adds a data-independent job fails here.
+JOB_CEILING = 27
+
+
+def test_in_memory_run_job_ceiling(spark, job_group):
+    from bern_spark.datagen import generate, to_spark
+
+    t = to_spark(spark, generate(n_convs=12))
+    d = {k: t[k] for k in t if k.startswith(("dict_", "meta_"))}
+    with job_group("er_job_ceiling") as n:
+        res = resolve_entities(t["transcripts"], t["lexicon"], d, id_merge=t["id_merge"])
+        ann = res["annotations"].localCheckpoint(eager=True)
+    ann.unpersist()
+    assert n[0] <= JOB_CEILING, n[0]
+
+
+def test_mirna_tagger_extracts_once(spark, dfs, dicts, monkeypatch):
+    """With the miRNA tagger on and no lineage store, the lexicon
+    extraction runs once per mention row: the miRNA split must read a
+    cut relation, not re-run the pandas-UDF extraction per branch."""
+    import bern_spark.pipeline as P
+
+    acc = spark.sparkContext.accumulator(0)
+    real = P.extract_mentions
+
+    def counted(tr, lex):
+        m = real(tr, lex)
+
+        def count(batches):
+            for b in batches:
+                acc.add(len(b))
+                yield b
+
+        return m.mapInPandas(count, m.schema)
+
+    monkeypatch.setattr(P, "extract_mentions", counted)
+    mirna = spark.createDataFrame([("MIRBASE:hsa21", "hsa-mir-21")], ["oid", "name"])
+    res = P.resolve_entities(dfs["transcripts"], dfs["lexicon"], dicts, mirna_dict=mirna)
+    res["annotations"].localCheckpoint(eager=True).unpersist()
+    assert acc.value == real(dfs["transcripts"], dfs["lexicon"]).count()

@@ -28,13 +28,14 @@ def test_cc_star_round_has_no_wide_row_aggregate(spark):
 
 def test_cc_high_degree_hub(spark):
     # one node of degree 100k: must complete without materializing the
-    # neighborhood as a single array row
+    # neighborhood as a single array row (a star-loop property, so the
+    # driver path is switched off)
     from bern_spark.operators.cc import connected_components
 
     edges = spark.range(100_000).select(
         F.lit("hub").alias("src"), F.concat(F.lit("n"), F.col("id")).alias("dst")
     )
-    labels = connected_components(edges)
+    labels = connected_components(edges, driver_max_edges=0)
     agg = labels.agg(
         F.countDistinct("cluster_id").alias("k"), F.count("*").alias("n")
     ).collect()[0]
@@ -47,8 +48,9 @@ def test_cc_warns_on_max_iter_exhaustion(spark):
     path = spark.createDataFrame(
         [(f"p{i:02d}", f"p{i+1:02d}") for i in range(40)], ["src", "dst"]
     )
+    # only the star loop iterates; the driver union-find cannot exhaust
     with pytest.warns(RuntimeWarning, match="max_iter"):
-        connected_components(path, max_iter=1).collect()
+        connected_components(path, max_iter=1, driver_max_edges=0).collect()
 
 
 # ---------------------------------------------------------------------------

@@ -123,11 +123,16 @@ def test_cc_correct_with_non_default_checkpointing(spark, every):
         [("b", "a"), ("c", "b"), ("d", "c"), ("e", "d"), ("y", "x")],
         ["src", "dst"],
     )
-    got = {
-        r["node"]: r["cluster_id"]
-        for r in connected_components(edges, checkpoint_every=every).collect()
-    }
-    assert got == {"a": "a", "b": "a", "c": "a", "d": "a", "e": "a", "x": "x", "y": "x"}
+    # both plans: the default bound labels on the driver, 0 forces the
+    # star loop whose checkpointing is under test
+    for bound in (200_000, 0):
+        got = {
+            r["node"]: r["cluster_id"]
+            for r in connected_components(
+                edges, checkpoint_every=every, driver_max_edges=bound
+            ).collect()
+        }
+        assert got == {"a": "a", "b": "a", "c": "a", "d": "a", "e": "a", "x": "x", "y": "x"}
 
 
 def test_cc_rejects_never_checkpoint(spark):
@@ -136,8 +141,9 @@ def test_cc_rejects_never_checkpoint(spark):
     from bern_spark.operators.cc import connected_components
 
     edges = spark.createDataFrame([("b", "a")], ["src", "dst"])
-    with pytest.raises(ValueError, match="checkpoint_every"):
-        connected_components(edges, checkpoint_every=0)
+    for bound in (200_000, 0):
+        with pytest.raises(ValueError, match="checkpoint_every"):
+            connected_components(edges, checkpoint_every=0, driver_max_edges=bound)
 
 
 # ---------------------------------------------------------------------------

@@ -486,6 +486,16 @@ def test_er_pipeline_matches_full_oracle(spark):
     assert res[0]["rows"] > 0
 
 
+def test_er_cc_matches_oracle(spark):
+    """q_er_cc (small enough for CC's driver union-find) hash-matches the
+    recursive min-label reachability in DuckDB."""
+    from bern_spark.oracle_check import run_all
+
+    res = run_all(spark, "/root/testdata/sf0.001", names=["er_cc"])
+    assert res[0]["ok"], res[0]
+    assert res[0]["rows"] > 0
+
+
 def test_tmchem_sql_class_matches_spark_kernel(spark):
     """The RE2-safe SQL char class strips exactly what keys.tmchem_key
     strips — every string.punctuation char, whitespace, case — so the
